@@ -310,17 +310,29 @@ def pair_features(
     """
     if "n_shared" in pairs.columns:
         pairs = _with_prior_features(pairs)
-    has_emb = "emb" in payload.columns or "emb_a" in pairs.columns
     # the dual-bucket checkpoint layout persists pairs WITH the a-side
     # payload already attached (pair_payload_half, bucketed on id_b) —
     # attach only the sides still missing
     sides = tuple(s for s in ("a", "b") if f"head_{s}" not in pairs.columns)
+    payload_emb = "emb" in payload.columns
+    # embedding columns present once the missing sides are attached
+    emb_sides = [
+        s for s in ("a", "b")
+        if f"emb_{s}" in pairs.columns or (payload_emb and s in sides)
+    ]
+    if len(emb_sides) == 1:
+        raise ValueError(
+            f"pair_features: emb_{emb_sides[0]} is present but the other "
+            "side has no embedding — pairs carrying an attached embedding "
+            "side need a payload built with the same embeddings "
+            "(doc_payload(embeddings=..., emb_dim=...))"
+        )
+    has_emb = len(emb_sides) == 2
     p = attach_pair_payload(
         pairs,
         payload,
         "id",
-        ["head", "token_cnt", "tfidf"]
-        + (["emb"] if "emb" in payload.columns else []),
+        ["head", "token_cnt", "tfidf"] + (["emb"] if payload_emb else []),
         sides=sides,
     )
     head_a, head_b = F.col("head_a"), F.col("head_b")

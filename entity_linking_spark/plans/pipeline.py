@@ -10,7 +10,8 @@ Stage graph (SURVEY.md §7.1, each stage checkpointable via
       pairs    → block self-join, id_a < id_b, dedup
       score    → JVM+Arrow pair features ▷ fixed-weight linear score
       edges    → score ≥ τ
-      cluster  → large-star/small-star connected components
+      cluster  → connected components (driver solve ≤ 2M edges,
+                 large-star/small-star above)
       metrics  → pairwise P/R/F1 vs labeled_pairs
 
 Reference lineage: the stages mirror the reference's candidate-generation →
@@ -64,7 +65,7 @@ def estimated_scan_width(df: DataFrame) -> int | None:
     (and why raw file count under-counts a large multi-row-group file —
     round-4 advice). Returns ``None`` when the estimate isn't cheaply
     available (in-memory frame, non-local scheme, unreadable footer);
-    callers then fall back to the file-count heuristic.
+    ``_widen_input`` then falls back to the file-count heuristic.
     """
     import math
     import os
@@ -122,11 +123,16 @@ def _widen_input(pages: DataFrame) -> DataFrame:
     row-group cap), NOT raw file count: a few large multi-row-group files
     already scan wide and must not pay a needless full-corpus shuffle,
     and in-memory frames (zero files) inherit their source parallelism
-    and are left alone (round-4 advice).
+    and are left alone (round-4 advice). Where the estimate is
+    unavailable for a file-backed frame (``s3://``, ``hdfs://``,
+    unreadable footer) the file count stands in for it.
     """
     n_par = pages.sparkSession.sparkContext.defaultParallelism
     width = estimated_scan_width(pages)
-    if width is not None and width < n_par:
+    if width is None:
+        # zero input files = in-memory frame: never narrow
+        width = len(pages.inputFiles()) or n_par
+    if width < n_par:
         return pages.repartition(n_par)
     return pages
 
@@ -161,10 +167,13 @@ class LinkageConfig:
     # Default None = executor-local localCheckpoint (fastest); set on
     # preemptible clusters where a lost executor must not kill the
     # fixpoint iteration (see operators.cluster.connected_components).
+    # Only takes effect above the driver-solve gate (2M edges); smaller
+    # edge sets are solved on the driver in one collect.
     cc_checkpoint_dir: str | None = None
     # combined CC rounds per fixpoint probe (driver collect). 2 wins on
     # multi-core executors (cold flagship 43.0s -> 28.5s same-hour A/B);
     # set 1 on 1-core/small-heap executors (see connected_components).
+    # Like cc_checkpoint_dir, only takes effect above the 2M-edge gate.
     cc_fuse_rounds: int = 2
     # bigint tfidf map keys (xxhash64 of the token) in the scoring
     # payload — key-identity algebra downstream, ~20% smaller shuffle
@@ -238,8 +247,9 @@ def link_pages(
     # ``config.id_bits=128`` switches to a two-seed xxhash64 struct —
     # 16 bytes, birthday-safe at the north star's 10^12 docs — which
     # flows through blocking/pairs/CC unchanged (struct ids group, join,
-    # compare and hash natively; tests/test_e2e_f1.py proves 64- and
-    # 128-bit runs produce identical clusters).
+    # compare and hash natively; tests/test_pair_features_v2.py::
+    # test_id_bits_128_parity proves 64- and 128-bit runs produce
+    # identical clusters).
     # Already-integral ids ARE 8 bytes: use them directly (order-
     # preserving, collision-free) and skip both the hash and the
     # end-stage representative restore (min _nid == min id).

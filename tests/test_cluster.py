@@ -3,15 +3,43 @@
 Mirrors the reference's hand-computed-golden test style
 (``/root/reference/test/max_product_test.py``) plus randomized graphs for
 the scale paths (chain = transitivity, star = skew, random = convergence)
-per FIXTURES.md §7.
+per FIXTURES.md §7. Every graph runs on both paths: the driver solve
+(small edge sets) and the distributed star rounds, forced by lowering
+the driver gate to zero edges.
 """
 
+import os
 import random
+import warnings
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from entity_linking_spark.operators import cluster
 from entity_linking_spark.operators.cluster import connected_components
+
+PATHS = ("driver", "distributed")
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Force the distributed star rounds for every edge set."""
+    monkeypatch.setattr(cluster, "_LOCAL_MAX_EDGES", 0)
+
+
+def _key(v):
+    return tuple(v) if isinstance(v, Row) else v
+
+
+def _components(df, path, **cc_kwargs):
+    with pytest.MonkeyPatch.context() as mp:
+        if path == "distributed":
+            mp.setattr(cluster, "_LOCAL_MAX_EDGES", 0)
+        return {
+            _key(r["node"]): _key(r["component"])
+            for r in connected_components(df, **cc_kwargs).collect()
+        }
 
 
 def _union_find(n_nodes, edges):
@@ -35,12 +63,8 @@ def _union_find(n_nodes, edges):
     return {x: find(x) for x in parent}
 
 
-def _check(spark, edges, **cc_kwargs):
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df, **cc_kwargs).collect()
-    }
+def _check(spark, edges, schema="src long, dst long", paths=PATHS, **cc_kwargs):
+    df = spark.createDataFrame(edges, schema)
     exp = _union_find(None, edges)
     # union-find roots are the min of each component because union() always
     # parents the larger root — still normalize via a second pass
@@ -49,7 +73,8 @@ def _check(spark, edges, **cc_kwargs):
         comp_min.setdefault(root, node)
         comp_min[root] = min(comp_min[root], node)
     exp_norm = {node: comp_min[root] for node, root in exp.items()}
-    assert got == exp_norm
+    for path in paths:
+        assert _components(df, path, **cc_kwargs) == exp_norm, path
 
 
 def test_chain(spark):
@@ -78,15 +103,11 @@ def test_random_graph(spark):
 
 def test_singleton_nodes_kept(spark):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    out = connected_components(df)
-    assert out.count() == 2
+    for path in PATHS:
+        assert len(_components(df, path)) == 2, path
 
 
-def test_unconverged_warns(spark):
-    import warnings
-
-    from entity_linking_spark.operators.cluster import connected_components
-
+def test_unconverged_warns(spark, distributed):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 40)], "src long, dst long"
     )
@@ -96,11 +117,9 @@ def test_unconverged_warns(spark):
     assert any("fixpoint" in str(w.message) for w in rec)
 
 
-def test_reliable_checkpoint_dir(spark, tmp_path):
+def test_reliable_checkpoint_dir(spark, tmp_path, distributed):
     # checkpoint_dir switches localCheckpoint → reliable checkpoint: the
     # result is identical and checkpoint files land under the given dir
-    import os
-
     edges = [(i, i + 1) for i in range(15)] + [(100, 101)]
     df = spark.createDataFrame(edges, "src long, dst long")
     ckdir = str(tmp_path / "cc_ckpt")
@@ -149,4 +168,130 @@ def test_fuse_rounds_parity(spark, tmp_path, fuse_rounds, reliable):
         kwargs["checkpoint_dir"] = str(
             tmp_path / f"cc_fuse{fuse_rounds}"
         )
-    _check(spark, [(a, b) for a, b in edges if a != b or a == 3], **kwargs)
+    _check(
+        spark,
+        [(a, b) for a, b in edges if a != b or a == 3],
+        paths=("distributed",),
+        **kwargs,
+    )
+
+
+def test_struct_ids_order_like_spark(spark):
+    # id_bits=128 ids are struct<h1, h2>; Spark orders structs
+    # lexicographically on the signed fields, as Python orders tuples
+    big = 2**63 - 1
+    edges = [
+        ((1, -5), (1, 3)),
+        ((-2, big), (1, 3)),
+        ((-2, -big - 1), (7, 0)),
+        ((7, 0), (7, -1)),
+        ((5, 3), (6, 0)),
+        ((5, 3), (5, -4)),  # min decided by h2
+        ((9, 9), (9, 9)),
+    ]
+    _check(spark, edges, schema="src struct<h1:long,h2:long>, "
+           "dst struct<h1:long,h2:long>")
+
+
+def test_string_ids_order_like_spark(spark):
+    # url ids (run_linkage_checkpointed) compare as UTF-8 bytes, which is
+    # code point order: "\uffff" sorts before an emoji, unlike UTF-16
+    edges = [
+        ("\U0001F600", "\uffff"),
+        ("b", "é"),
+        ("B", "é"),
+        ("", "x"),
+        ("z", "z"),
+    ]
+    _check(spark, edges, schema="src string, dst string")
+
+
+def test_negative_int64_ids(spark):
+    # xxhash64 ids are signed and span the whole int64 range
+    lo, hi = -(2**63), 2**63 - 1
+    _check(spark, [(hi, lo), (hi, -1), (0, -1), (5, 6), (-7, -7)])
+
+
+@pytest.mark.parametrize(
+    "id_type", ["bigint", "struct<h1:bigint,h2:bigint>"]
+)
+def test_empty_edge_set_keeps_id_type(spark, id_type):
+    df = spark.createDataFrame([], f"src {id_type}, dst {id_type}")
+    for path in PATHS:
+        with pytest.MonkeyPatch.context() as mp:
+            if path == "distributed":
+                mp.setattr(cluster, "_LOCAL_MAX_EDGES", 0)
+            out = connected_components(df)
+        assert out.collect() == [], path
+        assert [f.dataType.simpleString() for f in out.schema] == [
+            id_type, id_type
+        ], path
+
+
+def test_giant_chain_converges_within_default_max_iter(spark):
+    # a 1,000-node chain under shuffled ids: the worst diameter for the
+    # star rounds, which must converge within the default max_iter and
+    # agree label for label with the driver solve
+    rng = random.Random(11)
+    ids = rng.sample(range(-(10**12), 10**12), 1000)
+    df = spark.createDataFrame(list(zip(ids, ids[1:])), "src long, dst long")
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        dist = _components(df, "distributed")
+    assert not [w for w in rec if "fixpoint" in str(w.message)]
+    assert dist == {i: min(ids) for i in ids}
+    assert _components(df, "driver") == dist
+
+
+def test_driver_path_leaves_checkpoint_dir_alone(spark, tmp_path):
+    # a reliable checkpoint dir only shapes the distributed rounds: the
+    # driver solve deletes its edge snapshot and hands the session
+    # checkpoint dir back
+    ckdir = str(tmp_path / "cc_ckpt_driver")
+    df = spark.createDataFrame([(1, 2), (3, 2), (8, 9)], "src long, dst long")
+    got = _components(df, "driver", checkpoint_dir=ckdir)
+    assert got == {1: 1, 2: 1, 3: 1, 8: 8, 9: 8}
+    assert not [
+        d for _, dirs, _ in os.walk(ckdir) for d in dirs if d.startswith("rdd-")
+    ]
+    opt = spark.sparkContext._jsc.sc().getCheckpointDir()
+    assert not (opt.isDefined() and "cc_ckpt_driver" in opt.get())
+
+
+def _labelled_jobs(spark, group, run):
+    """→ descriptions of the jobs ``run`` starts under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "caller")
+    try:
+        run()
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc._jsc.clearJobGroup()
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    descs = []
+    for j in sc.statusTracker().getJobIdsForGroup(group):
+        d = jsc.statusStore().job(j).description()
+        descs.append(d.get() if d.isDefined() else None)
+    return descs
+
+
+def test_job_descriptions_name_the_path(spark):
+    # labels are local properties: they add no jobs. The driver solve is
+    # the edge snapshot plus one Arrow collect; the distributed rounds
+    # label each fixpoint probe; the caller's description comes back
+    df = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    descs = _labelled_jobs(
+        spark, "cc-driver", lambda: connected_components(df)
+    )
+    assert sorted(descs) == [
+        "cc: driver solve (2 edges)", "cc: materialize edges"
+    ]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cluster, "_LOCAL_MAX_EDGES", 0)
+        descs = _labelled_jobs(
+            spark, "cc-distributed", lambda: connected_components(df)
+        )
+    assert descs and all(d.startswith("cc: ") for d in descs), descs
+    assert "cc: star probe 1" in descs
+    assert not any("driver solve" in d for d in descs)

@@ -23,7 +23,11 @@ from pyspark.sql import functions as F
 from entity_linking_spark.datagen import write_parquet
 from entity_linking_spark.functions.text import words
 from entity_linking_spark.operators.pairs import candidate_pairs
-from entity_linking_spark.operators.scoring import doc_payload, pair_features
+from entity_linking_spark.operators.scoring import (
+    doc_payload,
+    pair_features,
+    pair_payload_half,
+)
 from entity_linking_spark.plans.pipeline import (
     LinkageConfig,
     link_pages,
@@ -128,6 +132,24 @@ def test_pair_emb_features_match_numpy(spark, tiny):
     assert rows[(1, 3)]["emb_cos"] == pytest.approx(0.0)
     # no emb_* payload residue in the output schema
     assert "emb_a" not in rows[(1, 2)].asDict()
+
+
+def test_half_stage_emb_needs_emb_payload(spark, tiny):
+    # a resumed dual-bucket half stage carries emb_a; scoring it against
+    # a payload without embeddings is a clear error, not an unresolved
+    # emb_b column
+    pages, emb = tiny
+    with_emb = doc_payload(pages, id_col="id", embeddings=emb, emb_dim=2)
+    plain = doc_payload(pages, id_col="id")
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    half = pair_payload_half(pairs, with_emb)
+    with pytest.raises(ValueError, match="emb_a"):
+        pair_features(half, plain)
+    # the same half stage against a matching payload scores as usual
+    row = pair_features(half, with_emb).collect()[0]
+    assert row["emb_dot"] == pytest.approx(
+        pair_features(pairs, with_emb).collect()[0]["emb_dot"]
+    )
 
 
 def test_candidate_pairs_with_count_and_prior(spark):

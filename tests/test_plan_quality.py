@@ -145,3 +145,34 @@ def test_widen_input_scan_width_estimate(spark, tmp_path):
     mem = spark.createDataFrame([(1, "a")], "id long, text string")
     assert estimated_scan_width(mem) is None
     assert _widen_input(mem) is mem  # no needless full-frame shuffle
+
+
+def test_widen_falls_back_to_file_count(spark, tmp_path, monkeypatch):
+    # a file-backed input whose scan width cannot be estimated (remote
+    # store, unreadable footer) is still widened when it has fewer files
+    # than cores; many files, or an in-memory frame, are left alone
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from entity_linking_spark import queries
+    from entity_linking_spark.plans import pipeline
+
+    monkeypatch.setattr(pipeline, "estimated_scan_width", lambda df: None)
+    n_par = spark.sparkContext.defaultParallelism
+    tbl = pa.table({"id": list(range(100)), "text": ["lorem"] * 100})
+    pq.write_table(tbl, str(tmp_path / "narrow.parquet"))
+    many = tmp_path / "many.parquet"
+    many.mkdir()
+    for i in range(n_par):
+        pq.write_table(tbl, str(many / f"part-{i}.parquet"))
+
+    narrow = spark.read.parquet(str(tmp_path / "narrow.parquet"))
+    assert pipeline._widen_input(narrow).rdd.getNumPartitions() == n_par
+    assert (
+        queries._tw(spark, str(tmp_path), "narrow").rdd.getNumPartitions()
+        == n_par
+    )
+    wide = spark.read.parquet(str(many))
+    assert pipeline._widen_input(wide) is wide
+    mem = spark.createDataFrame([(1, "a")], "id long, text string")
+    assert pipeline._widen_input(mem) is mem
