@@ -2,15 +2,16 @@
 
 Two paths, chosen per call by the size of the materialized edge set:
 
-- **Driver solve** (at most ``_LOCAL_MAX_EDGES`` edges, 2M = 32 MB of
-  int64 pairs): the edges are collected once as Arrow, factorised in
-  Spark's id order and solved in numpy by min-root hooking with pointer
-  jumping. On small edge sets the
-  distributed rounds are almost all per-job and per-probe overhead, not
-  data: at ``local[4]`` a 3,316-edge chain graph spent 85 of its
-  linkage run's 116 Spark jobs and ~9.5 s in them. The driver solve is
-  two jobs (edge snapshot + one Arrow collect), with the same schema and
-  the same ``component = min node id`` contract.
+- **Driver solve** (ids of at most ``_LOCAL_MAX_BYTES``, 32 MB: 2M
+  int64 edges, or ~250k edges of 65-byte urls): the edges are collected
+  once as Arrow, factorised in Spark's id order and solved in numpy by
+  min-root hooking with pointer jumping. The distributed rounds are
+  mostly per-job and per-probe overhead at these sizes: at ``local[4]``
+  a 3,316-edge chain graph spent 85 of its linkage run's 116 Spark jobs
+  and ~9.5 s in them, and a 2M-edge graph of 300-node chains took ~60 s
+  there against ~7 s here. The driver solve is two jobs (edge snapshot +
+  one Arrow collect), with the same schema and the same ``component =
+  min node id`` contract.
 - **Distributed** (above the gate): large-star / small-star alternation
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
   SOCC'14 — public algorithm), implemented as iterated DataFrame
@@ -37,7 +38,7 @@ import warnings
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegralType,
@@ -46,10 +47,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# Largest edge set solved on the driver: 2M int64 pairs are 32 MB there,
-# and the numpy solve of a worst-case 2M-edge chain with shuffled ids
-# takes ~3 s. A driver-memory bound, not a tuning knob.
-_LOCAL_MAX_EDGES = 2_000_000
+# Largest edge set solved on the driver, in bytes of its ids there
+# (``_edge_bytes``: 16 per int64 edge, the UTF-8 bytes of a url edge).
+# 32 MB is 2M int64 edges, the largest int64 size measured end to end.
+# Read from parquet, solved and joined back onto the pages at local[4],
+# the driver solve beat the star rounds 4-18x at every size measured
+# (3k-2M int64 edges, 250k-1M url edges), so this bounds driver memory
+# and the collect (spark.driver.maxResultSize), not a speed crossover.
+_LOCAL_MAX_BYTES = 32_000_000
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -93,6 +98,16 @@ def _driver_solvable(dtype) -> bool:
     if isinstance(dtype, StructType):
         return all(isinstance(f.dataType, IntegralType) for f in dtype.fields)
     return isinstance(dtype, IntegralType) or dtype == StringType()
+
+
+def _edge_bytes(dtype) -> Column:
+    """Bytes of one edge's two ids on the driver: 8 per integer field,
+    the UTF-8 length of a string."""
+    if isinstance(dtype, StructType):
+        return F.lit(16 * len(dtype.fields))
+    if isinstance(dtype, IntegralType):
+        return F.lit(16)
+    return F.octet_length("src") + F.octet_length("dst")
 
 
 def _factorize(ids: pa.Array) -> tuple[pa.Array, np.ndarray]:
@@ -146,7 +161,7 @@ def _min_roots(u: np.ndarray, v: np.ndarray, n_nodes: int) -> np.ndarray:
             parent = jumped
 
 
-def _solve_on_driver(raw: DataFrame, n_edges: int) -> DataFrame:
+def _solve_on_driver(raw: DataFrame) -> DataFrame:
     """Connected components of a small materialized edge set, on the
     driver. Self-loop-only nodes stay singletons, as on the distributed
     path."""
@@ -155,15 +170,17 @@ def _solve_on_driver(raw: DataFrame, n_edges: int) -> DataFrame:
         [StructField("node", dtype), StructField("component", dtype)]
     )
     spark = raw.sparkSession
-    if n_edges == 0:
-        return spark.createDataFrame([], schema)
     tbl = raw.toArrow()
+    # split at the rows actually collected, not at the observed count
+    n = tbl.num_rows
+    if n == 0:
+        return spark.createDataFrame([], schema)
     node, dense = _factorize(
         pa.concat_arrays(
             [tbl.column(c).combine_chunks() for c in ("src", "dst")]
         )
     )
-    roots = _min_roots(dense[:n_edges], dense[n_edges:], len(node))
+    roots = _min_roots(dense[:n], dense[n:], len(node))
     out = pa.table({"node": node, "component": node.take(pa.array(roots))})
     return spark.createDataFrame(out, schema)
 
@@ -202,8 +219,8 @@ def connected_components(
     edge set is on disk (shared storage holds ~2 edge-set copies, not
     O(rounds)), and a caller-set checkpoint dir is restored on exit.
 
-    Edge sets of at most ``_LOCAL_MAX_EDGES`` edges are solved on the
-    driver instead (module docstring); ``max_iter``, ``checkpoint_dir``
+    Edge sets whose ids take at most ``_LOCAL_MAX_BYTES`` are solved on
+    the driver instead (module docstring); ``max_iter``, ``checkpoint_dir``
     and ``fuse_rounds`` only shape the distributed rounds above that gate.
     Jobs carry the path taken as their description (``cc: driver solve
     (<n> edges)`` or ``cc: star probe <k>``); the caller's description
@@ -296,17 +313,22 @@ def _components(
     # working edge set from the raw lazy plan would execute the whole
     # upstream (blocking + scoring) twice
     spark.sparkContext.setJobDescription("cc: materialize edges")
-    # the eager checkpoint's own job counts the edges for the gate
-    seen = Observation()
-    raw = _ckpt(edges.observe(seen, F.count(F.lit(1)).alias("n")), True)
-    n_edges = seen.get["n"]
-    if n_edges <= _LOCAL_MAX_EDGES and _driver_solvable(
-        raw.schema["src"].dataType
-    ):
-        spark.sparkContext.setJobDescription(
-            f"cc: driver solve ({n_edges} edges)"
+    dtype = edges.schema["src"].dataType
+    local = _driver_solvable(dtype)
+    if local:
+        # the eager checkpoint's own job sizes the edge set for the gate
+        seen = Observation()
+        edges = edges.observe(
+            seen,
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum(_edge_bytes(dtype)), F.lit(0)).alias("bytes"),
         )
-        comp = _solve_on_driver(raw, n_edges)
+    raw = _ckpt(edges, True)
+    if local and seen.get["bytes"] <= _LOCAL_MAX_BYTES:
+        spark.sparkContext.setJobDescription(
+            f"cc: driver solve ({seen.get['n']} edges)"
+        )
+        comp = _solve_on_driver(raw)
         # the result holds the solved labels itself, not a plan over raw
         _delete_superseded([raw])
         return comp

@@ -10,7 +10,7 @@ Stage graph (SURVEY.md §7.1, each stage checkpointable via
       pairs    → block self-join, id_a < id_b, dedup
       score    → JVM+Arrow pair features ▷ fixed-weight linear score
       edges    → score ≥ τ
-      cluster  → connected components (driver solve ≤ 2M edges,
+      cluster  → connected components (driver solve ≤ 32 MB of ids,
                  large-star/small-star above)
       metrics  → pairwise P/R/F1 vs labeled_pairs
 
@@ -167,13 +167,14 @@ class LinkageConfig:
     # Default None = executor-local localCheckpoint (fastest); set on
     # preemptible clusters where a lost executor must not kill the
     # fixpoint iteration (see operators.cluster.connected_components).
-    # Only takes effect above the driver-solve gate (2M edges); smaller
-    # edge sets are solved on the driver in one collect.
+    # Only takes effect above the driver-solve gate (32 MB of ids, 2M
+    # int64 edges); smaller edge sets are solved on the driver in one
+    # collect.
     cc_checkpoint_dir: str | None = None
     # combined CC rounds per fixpoint probe (driver collect). 2 wins on
     # multi-core executors (cold flagship 43.0s -> 28.5s same-hour A/B);
     # set 1 on 1-core/small-heap executors (see connected_components).
-    # Like cc_checkpoint_dir, only takes effect above the 2M-edge gate.
+    # Like cc_checkpoint_dir, only takes effect above the driver gate.
     cc_fuse_rounds: int = 2
     # bigint tfidf map keys (xxhash64 of the token) in the scoring
     # payload — key-identity algebra downstream, ~20% smaller shuffle

@@ -25,7 +25,7 @@ PATHS = ("driver", "distributed")
 @pytest.fixture
 def distributed(monkeypatch):
     """Force the distributed star rounds for every edge set."""
-    monkeypatch.setattr(cluster, "_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(cluster, "_LOCAL_MAX_BYTES", 0)
 
 
 def _key(v):
@@ -35,11 +35,12 @@ def _key(v):
 def _components(df, path, **cc_kwargs):
     with pytest.MonkeyPatch.context() as mp:
         if path == "distributed":
-            mp.setattr(cluster, "_LOCAL_MAX_EDGES", 0)
-        return {
-            _key(r["node"]): _key(r["component"])
-            for r in connected_components(df, **cc_kwargs).collect()
-        }
+            mp.setattr(cluster, "_LOCAL_MAX_BYTES", 0)
+        rows = connected_components(df, **cc_kwargs).collect()
+    got = {_key(r["node"]): _key(r["component"]) for r in rows}
+    # one row per node: a duplicate would fold away in the dict
+    assert len(rows) == len(got), path
+    return got
 
 
 def _union_find(n_nodes, edges):
@@ -104,7 +105,10 @@ def test_random_graph(spark):
 def test_singleton_nodes_kept(spark):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     for path in PATHS:
-        assert len(_components(df, path)) == 2, path
+        with pytest.MonkeyPatch.context() as mp:
+            if path == "distributed":
+                mp.setattr(cluster, "_LOCAL_MAX_BYTES", 0)
+            assert connected_components(df).count() == 2, path
 
 
 def test_unconverged_warns(spark, distributed):
@@ -220,7 +224,7 @@ def test_empty_edge_set_keeps_id_type(spark, id_type):
     for path in PATHS:
         with pytest.MonkeyPatch.context() as mp:
             if path == "distributed":
-                mp.setattr(cluster, "_LOCAL_MAX_EDGES", 0)
+                mp.setattr(cluster, "_LOCAL_MAX_BYTES", 0)
             out = connected_components(df)
         assert out.collect() == [], path
         assert [f.dataType.simpleString() for f in out.schema] == [
@@ -288,10 +292,36 @@ def test_job_descriptions_name_the_path(spark):
         "cc: driver solve (2 edges)", "cc: materialize edges"
     ]
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(cluster, "_LOCAL_MAX_EDGES", 0)
+        mp.setattr(cluster, "_LOCAL_MAX_BYTES", 0)
         descs = _labelled_jobs(
             spark, "cc-distributed", lambda: connected_components(df)
         )
     assert descs and all(d.startswith("cc: ") for d in descs), descs
     assert "cc: star probe 1" in descs
     assert not any("driver solve" in d for d in descs)
+
+
+def test_gate_counts_id_bytes(spark, monkeypatch):
+    # the driver gate bounds the bytes of the collected ids, not the edge
+    # count: two int64 edges are 64 bytes, the same graph under long urls
+    # is over 800 and stays on the distributed rounds
+    monkeypatch.setattr(cluster, "_LOCAL_MAX_BYTES", 100)
+    pad = "x" * 200
+    edges = [(1, 2), (2, 3)]
+    ints = spark.createDataFrame(edges, "src long, dst long")
+    urls = spark.createDataFrame(
+        [(f"{pad}{a}", f"{pad}{b}") for a, b in edges], "src string, dst string"
+    )
+    descs = _labelled_jobs(
+        spark, "cc-gate-int", lambda: connected_components(ints)
+    )
+    assert "cc: driver solve (2 edges)" in descs, descs
+    descs = _labelled_jobs(
+        spark, "cc-gate-url", lambda: connected_components(urls)
+    )
+    assert "cc: star probe 1" in descs, descs
+    assert not any("driver solve" in d for d in descs), descs
+    got = {
+        r["node"]: r["component"] for r in connected_components(urls).collect()
+    }
+    assert got == {f"{pad}{i}": f"{pad}1" for i in (1, 2, 3)}
